@@ -76,6 +76,31 @@ def test_ivf_probe_strategy_parity(spark, sf_dir):
     with pytest.raises(ValueError, match="probe_strategy"):
         idx.search(qdf, 4, probe_strategy="nope")
 
+    # A NaN-scored doc in a (cell, salt) group of <= k rows: the
+    # cogrouped GEMM must keep it and its group-mates, ranked first as
+    # the broadcast path's cosine expression ranks it, for any
+    # partitioning and salting.
+    nan_docs = spark.createDataFrame(
+        [(0, [float("nan"), 1.0, 0.0], 0), (1, [1.0, 0.0, 0.0], 0),
+         (2, [0.6, 0.8, 0.0], 0), (3, [0.0, 1.0, 0.0], 0)],
+        "vec_id long, embedding array<double>, cell int",
+    )
+    nq = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0])], "query_id long, query_vector array<double>"
+    )
+    cells = [(0, [1.0, 0.0, 0.0])]
+    want = [0, 1, 2, 3]
+    for parts in (1, 4):
+        nidx = IVFIndex(nan_docs.repartition(parts), cells, "vec_id", "embedding")
+        for bq, salt in ((True, None), (False, 1), (False, 4)):
+            got = [
+                r["vec_id"]
+                for r in nidx.search(
+                    nq, 5, nprobe=1, broadcast_queries=bq, cell_salt=salt
+                ).orderBy("rank").collect()
+            ]
+            assert got == want, (parts, bq, salt)
+
 
 def test_topk_join_matches_knn(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")

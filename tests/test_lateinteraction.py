@@ -16,7 +16,9 @@ def test_hand_computed_maxsim(spark):
     """Axis-aligned tokens make cos exact: q tokens e1, e2; doc A has
     {e1} → score 1 + 0; doc B has {e1+e2 normalized-ish, e2} → its
     best match per query token is cos(e1, [1,1,0]/√2)=1/√2 and
-    cos(e2, e2)=1 → score 1/√2 + 1."""
+    cos(e2, e2)=1 → score 1/√2 + 1. Doc C holds a NaN token: its score
+    stays NaN (not NULL), and the top-k ranks it first, where Spark
+    orders a NaN score."""
     qt = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0]), (0, [0.0, 1.0, 0.0])],
         "query_id long, vector array<double>",
@@ -26,6 +28,7 @@ def test_hand_computed_maxsim(spark):
             (100, [1.0, 0.0, 0.0]),
             (200, [1.0, 1.0, 0.0]),
             (200, [0.0, 1.0, 0.0]),
+            (300, [float("nan"), 1.0, 0.0]),
         ],
         "doc_id long, vector array<double>",
     )
@@ -35,6 +38,9 @@ def test_hand_computed_maxsim(spark):
     }
     assert got[100] == pytest.approx(1.0, abs=1e-6)
     assert got[200] == pytest.approx(1 / math.sqrt(2) + 1, abs=1e-6)
+    assert math.isnan(got[300])
+    ranked = maxsim_topk(qt, dt, 3).orderBy("rank").collect()
+    assert [r["doc_id"] for r in ranked] == [300, 200, 100]
 
 
 def test_zero_norm_token_contributes_zero(spark):

@@ -1,6 +1,8 @@
 """Product quantization: encode determinism, packed round-trip, ADC
 error/recall, strategy parity."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,6 +176,29 @@ def test_adc_topk_gemm_expr_parity(emb, model):
     e = adc_topk(coded, model, q, 25, strategy="expr").collect()
     g = adc_topk(coded, model, q, 25, strategy="gemm").collect()
     assert [tuple(r) for r in e] == [tuple(r) for r in g]
+
+    # A NaN LUT entry gives one row a NaN distance. In a batch of <= n
+    # rows it must neither vanish nor take its batch-mates with it: the
+    # kernel ranks it last, as the expr fold does, on any partitioning.
+    spark = emb.sparkSession
+    nan_model = PQModel(m=1, k=4, dim=3, codebooks=[[
+        (0, [float("nan"), 1.0, 0.0]), (1, [1.0, 0.0, 0.0]),
+        (2, [0.6, 0.8, 0.0]), (3, [0.0, 1.0, 0.0]),
+    ]])
+    nan_codes = spark.createDataFrame(
+        [(i, [i]) for i in range(4)], "vec_id long, pq_code array<int>"
+    )
+    runs = {}
+    for strategy, parts in (("expr", 1), ("gemm", 1), ("gemm", 4)):
+        rows = adc_topk(
+            nan_codes.repartition(parts), nan_model, [1.0, 0.0, 0.0], 5,
+            strategy=strategy,
+        ).orderBy("rank").collect()
+        runs[strategy, parts] = [(r["vec_id"], r["rank"]) for r in rows]
+        assert math.isnan(rows[-1]["adc_dist"]), (strategy, parts)
+    assert runs["expr", 1] == [(1, 1), (2, 2), (3, 3), (0, 4)]
+    assert runs["gemm", 1] == runs["expr", 1]
+    assert runs["gemm", 4] == runs["expr", 1]
 
 
 def test_adc_topk_gemm_handles_n_past_corpus(emb, model):

@@ -1,11 +1,17 @@
 """Batch kNN: expression path vs GEMM path agree; ranks deterministic."""
 
+import functools
+import math
+
+import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from weaviate_txtai_spark.functions.vector import l2_dist
 from weaviate_txtai_spark.operators import knn_topk, knn_topk_gemm
-from weaviate_txtai_spark.operators.topk import knn_single
+from weaviate_txtai_spark.operators.topk import knn_single, topk_indices
 from weaviate_txtai_spark.sources import load_table
 
 
@@ -143,10 +149,11 @@ def test_knn_single_plan_is_take_ordered(spark, sf_dir):
 
 
 def test_gemm_tie_break_matches_expression_path(spark):
-    """Score-tied groups straddling the k boundary must resolve the same
-    way on both paths: (score DESC, id ASC). The GEMM path's naive
-    argpartition kept arbitrary tie members (ADVICE r1); this pins the
-    deterministic widen-then-lexsort fix."""
+    """Score-tied groups straddling the k boundary, and NaN scores, must
+    resolve the same way on both paths and for any partitioning:
+    (score DESC | ASC, id ASC) in Spark's double order. The GEMM path's
+    naive argpartition kept arbitrary tie members (ADVICE r1); this pins
+    the deterministic widen-then-sort cut of ``topk_indices``."""
     # 20 docs in two tie groups: ids 0-9 identical vector A, 10-19 vector B.
     a, b = [1.0, 0.0], [0.8, 0.6]
     docs = spark.createDataFrame(
@@ -169,6 +176,40 @@ def test_gemm_tie_break_matches_expression_path(spark):
     ]
     assert expr == gemm
     assert [d for _, d in expr] == [0, 1, 2, 3, 4, 5, 6]  # id ASC within tie
+
+    # A NaN-scored doc: Spark orders NaN above every number (first under
+    # DESC, last under ASC). In a batch of <= k rows it must neither
+    # vanish nor take its batch-mates with it, on any partitioning.
+    nan = float("nan")
+    q = [1.0, 0.0, 0.0]
+    nan_docs = spark.createDataFrame(
+        [(0, [nan, 1.0, 0.0]), (1, [1.0, 0.0, 0.0]),
+         (2, [0.6, 0.8, 0.0]), (3, [0.0, 1.0, 0.0])],
+        "docid long, vector array<double>",
+    )
+    qdf = spark.createDataFrame([(0, q)], "query_id long, query_vector array<double>")
+    w_l2 = Window.partitionBy("query_id").orderBy(F.asc("score"), F.asc("docid"))
+    l2_expr = (
+        nan_docs.crossJoin(qdf)
+        .select(
+            "query_id", "docid",
+            F.round(l2_dist("vector", "query_vector"), 6).alias("score"),
+        )
+        .withColumn("rank", F.row_number().over(w_l2))
+        .filter(F.col("rank") <= 5)
+    )
+    expr_ids = {
+        metric: [r["docid"] for r in df.orderBy("rank").collect()]
+        for metric, df in (("cosine", knn_topk(nan_docs, qdf, 5)), ("l2", l2_expr))
+    }
+    assert expr_ids == {"cosine": [0, 1, 2, 3], "l2": [1, 2, 3, 0]}
+    for metric, want in expr_ids.items():
+        for parts in (1, 4):
+            gemm = knn_topk_gemm(
+                nan_docs.repartition(parts), [(0, q)], 5, metric=metric
+            )
+            got = [r["docid"] for r in gemm.orderBy("rank").collect()]
+            assert got == want, (metric, parts)
 
 
 def test_gemm_zero_query_and_string_ids(spark):
@@ -287,3 +328,56 @@ def test_gemm_numpy_int_ids_infer_long(spark):
     assert res.schema["query_id"].dataType == LongType()
     rows = res.collect()
     assert rows[0]["query_id"] == 7 and rows[0]["docid"] == 2
+
+
+def _spark_double_cmp(a, b):
+    """Spark's double ordering: NaN above every number, NaN equal to
+    NaN, -0.0 equal to 0.0."""
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) - math.isnan(b)
+    return (a > b) - (a < b)
+
+
+def _reference_topk(keys, ids, k, descending):
+    def cmp(i, j):
+        c = _spark_double_cmp(keys[i], keys[j])
+        return (-c if descending else c) or (ids[i] > ids[j]) - (ids[i] < ids[j])
+
+    return sorted(range(len(keys)), key=functools.cmp_to_key(cmp))[:k]
+
+
+_special = st.sampled_from(
+    [float("nan"), float("inf"), -float("inf"), 0.0, -0.0, 1.0, -1.0]
+)
+_key = st.one_of(_special, st.floats(allow_nan=True, allow_infinity=True))
+
+
+@st.composite
+def _topk_case(draw):
+    n = draw(st.integers(1, 12))
+    nrows = draw(st.integers(1, 4))
+    rows = [draw(st.lists(_key, min_size=n, max_size=n)) for _ in range(nrows)]
+    ids = draw(st.permutations(range(100, 100 + n)))
+    k = draw(st.one_of(st.sampled_from([0, 1, n, n + 3]), st.integers(1, n)))
+    descending = draw(st.booleans())
+    if 0 < k < n:
+        # force a tie straddling the k boundary in every row
+        for row in rows:
+            ref = _reference_topk(row, ids, n, descending)
+            row[ref[k]] = row[ref[k - 1]]
+    return rows, ids, k, descending
+
+
+@settings(max_examples=300, deadline=None)
+@given(_topk_case())
+def test_topk_indices_matches_full_sort(case):
+    """``topk_indices`` equals a full sort on (key, id) in Spark's double
+    order, for 1-D keys and per row of a 2-D key matrix."""
+    rows, ids, k, descending = case
+    want = [_reference_topk(row, ids, k, descending) for row in rows]
+    ids = np.asarray(ids)
+    got_2d = topk_indices(np.asarray(rows), ids, k, descending=descending)
+    assert got_2d.shape == (len(rows), min(k, len(ids)))
+    assert got_2d.tolist() == want
+    for row, w in zip(rows, want):
+        assert topk_indices(np.asarray(row), ids, k, descending=descending).tolist() == w

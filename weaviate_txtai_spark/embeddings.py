@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.functions.encoders import HashingEncoder
 from weaviate_txtai_spark.functions.vector import cosine_sim
+from weaviate_txtai_spark.operators.topk import rank_top
 
 _SIMILAR_RE = re.compile(r"similar\s*\(\s*'([^']*)'\s*\)", re.IGNORECASE)
 
@@ -371,13 +372,8 @@ class Embeddings:
             "docid",
             F.round(F.lit(1.0) - F.col("dist") / F.lit(2.0), 6).alias("score"),
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.desc("score"), F.asc("docid")
-        )
-        hits = (
-            hits.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= limit)
-        )
+        hits = rank_top(hits, limit, key="score", id_col="docid",
+                        descending=True, by="qid")
         cols = ["docid", "id", "text"] if self.content else ["docid", "id"]
         return (
             self._df.select(*cols)
@@ -401,13 +397,8 @@ class Embeddings:
             qdf, limit + 8, nprobe=nprobe,
             query_id_col="qid", query_vector_col="qv",
         ).select("qid", "docid", F.round("score", 6).alias("score"))
-        w = Window.partitionBy("qid").orderBy(
-            F.desc("score"), F.asc("docid")
-        )
-        hits = (
-            hits.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= limit)
-        )
+        hits = rank_top(hits, limit, key="score", id_col="docid",
+                        descending=True, by="qid")
         cols = ["docid", "id", "text"] if self.content else ["docid", "id"]
         return (
             self._df.select(*cols)

@@ -16,7 +16,17 @@ For anything pair-heavy the Arrow kernels are the production path and
 exist for every tier: ``operators/topk.py`` ``knn_topk_gemm`` (batch
 kNN), the cogrouped scorers in ``operators/ann.py``/``ivfpq.py``, and
 the per-batch gather kernel in ``operators/pq.py``; these exprs remain
-the canonical, oracle-matching definition.
+the canonical, oracle-matching definition of the scores.
+
+Every tier, expression or kernel, ranks by ONE rule: score DESC (or
+distance ASC), ties by id ASC, in Spark's double order (NaN above every
+number, -0.0 equal to 0.0). It lives in ``operators/topk.py``:
+``topk_indices`` is the numpy cut each kernel applies to its Arrow batch
+or cogroup, ``rank_top`` the Spark window (or TakeOrderedAndProject)
+that merges the survivors. Because the local cut orders exactly as the
+final window does, a tier's result does not depend on partitioning.
+``unit_rows`` there is the numpy twin of ``cosine_sim``'s zero-norm guard
+below.
 """
 
 from __future__ import annotations

@@ -22,11 +22,18 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.cache import scoped_persist
 from weaviate_txtai_spark.functions.vector import cosine_sim
+from weaviate_txtai_spark.operators.topk import (
+    decode_vectors,
+    keep_nan,
+    rank_top,
+    topk_indices,
+    unit_rows,
+)
 
 
 def probe_cells_gemm(
@@ -55,8 +62,7 @@ def probe_cells_gemm(
     Q × nlist rows.
 
     Tie-break parity with the expr twin: distances round to
-    ``round_decimals`` then (metric order, cell ASC) via lexsort —
-    the same rule the window's (dist ASC | sim DESC, cell ASC) applies.
+    ``round_decimals``, then ``topk_indices`` picks the cells.
     ``metric``: 'l2' (squared L2, ascending — the IVF-PQ probe) or
     'cosine' (descending — the IVF probe).
     """
@@ -79,9 +85,7 @@ def probe_cells_gemm(
     cell_ids = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (nlist, dim)
     if metric == "cosine":
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        cn[cn == 0.0] = 1.0
-        Cn = C / cn
+        Cn = unit_rows(C)
     csq = (C * C).sum(axis=1)  # (nlist,)
     np_take = min(nprobe, len(cents))
 
@@ -98,7 +102,7 @@ def probe_cells_gemm(
         for pdf in batches:
             if pdf.empty:
                 continue
-            Q = np.asarray(list(pdf[query_vector_col]), dtype=np.float64)
+            Q = decode_vectors(pdf[query_vector_col])
             if metric == "l2":
                 # expanded form: one GEMM; clip the fp-cancellation dip
                 d = np.clip(
@@ -108,15 +112,12 @@ def probe_cells_gemm(
                     0.0,
                     None,
                 )
-                key = np.round(d, round_decimals)  # ascending
+                key = np.round(d, round_decimals)
             else:
-                qn = np.linalg.norm(Q, axis=1, keepdims=True)
-                qn[qn == 0.0] = 1.0
-                key = -np.round((Q / qn) @ Cn.T, round_decimals)  # asc(-sim)
-            # per query: (key ASC, cell ASC) — full lexsort over nlist is
-            # fine (nlist ≪ corpus; this is per-batch driver-free work)
-            order = np.lexsort((np.broadcast_to(cell_ids, key.shape), key),
-                               axis=1)[:, :np_take]
+                key = np.round(unit_rows(Q) @ Cn.T, round_decimals)
+            order = topk_indices(
+                key, cell_ids, np_take, descending=metric == "cosine"
+            )
             qids = pdf[query_id_col].to_numpy()
             yield pd.DataFrame(
                 {
@@ -466,22 +467,18 @@ class IVFIndex:
                 F.col(query_id_col).alias("__qid"),
                 F.col(query_vector_col).alias("__qv"),
             )
-            # tiny crossJoin: queries × nlist centroids
-            wprobe = Window.partitionBy("__qid").orderBy(
-                F.desc("__csim"), F.asc("cell")
-            )
-            probes = (
-                q.crossJoin(F.broadcast(cent))
-                # round to 9 decimals BEFORE the (sim DESC, cell ASC)
-                # tie-break so the expr twin orders on the same key as
-                # probe_cells_gemm (which rounds its BLAS sims to 9) —
-                # unrounded, two centroids within ~1e-9 could rank
-                # differently across strategies (ADVICE r6)
-                .withColumn("__csim", F.round(cosine_sim("__qv", "centroid"), 9))
-                .withColumn("__pr", F.row_number().over(wprobe))
-                .filter(F.col("__pr") <= nprobe)
-                .select("__qid", "__qv", "cell")
-            )
+            # tiny crossJoin: queries × nlist centroids. Round to 9
+            # decimals BEFORE the ranking so the expr twin orders on the
+            # same key as probe_cells_gemm (which rounds its BLAS sims to
+            # 9) — unrounded, two centroids within ~1e-9 could rank
+            # differently across strategies (ADVICE r6)
+            probes = rank_top(
+                q.crossJoin(F.broadcast(cent)).withColumn(
+                    "__csim", F.round(cosine_sim("__qv", "centroid"), 9)
+                ),
+                nprobe, key="__csim", id_col="cell", descending=True,
+                by="__qid",
+            ).select("__qid", "__qv", "cell")
         else:
             raise ValueError(
                 f"IVFIndex.search: unknown probe_strategy {probe_strategy!r}"
@@ -542,13 +539,8 @@ class IVFIndex:
             scored = self._cogroup_scored(
                 corpus, probes, k, query_id_col=query_id_col
             )
-            w = Window.partitionBy(query_id_col).orderBy(
-                F.desc("score"), F.asc(self.id_col)
-            )
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-            )
+            return rank_top(scored, k, key="score", id_col=self.id_col,
+                            descending=True, by=query_id_col)
         # broadcast path: equi-join on cell; Q is human-batch-sized, so
         # the per-pair cosine expr stays cheap and fully JVM-side
         scored = (
@@ -559,13 +551,8 @@ class IVFIndex:
                 cosine_sim(F.col(self.vector_col), F.col("__qv")).alias("score"),
             )
         )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("score"), F.asc(self.id_col)
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        return rank_top(scored, k, key="score", id_col=self.id_col,
+                        descending=True, by=query_id_col)
 
     def _cogroup_scored(
         self,
@@ -576,9 +563,9 @@ class IVFIndex:
         query_id_col: str,
     ) -> DataFrame:
         """Per-(cell, salt) cogrouped GEMM scoring (see search). Emits
-        each probe query's top-k WITHIN the group by (cosine desc, id
-        asc) — the same ordering the final window applies, so the merge
-        over a query's nprobe×salt groups is exact."""
+        each probe query's top-k WITHIN the group (``topk_indices``), so
+        the final window's merge over a query's nprobe×salt groups is
+        exact."""
         import numpy as np
         import pandas as pd
 
@@ -590,38 +577,22 @@ class IVFIndex:
             if cpdf.empty or qpdf.empty:
                 return pd.DataFrame({"__qid": [], id_col: [], "score": []})
             ids = cpdf[id_col].to_numpy()
-            C = np.asarray(list(cpdf["__vec"]), dtype=np.float64)
-            Q = np.asarray(list(qpdf["__qv"]), dtype=np.float64)
-            for M in (C, Q):
-                n = np.linalg.norm(M, axis=1)
-                n[n == 0.0] = 1.0
-                M /= n[:, None]
-            kk = min(k, len(ids))
+            C = unit_rows(decode_vectors(cpdf["__vec"]))
+            Q = unit_rows(decode_vectors(qpdf["__qv"]))
             out_q, out_i, out_s = [], [], []
             chunk = 1024
             qids = qpdf["__qid"].to_numpy()
             for lo in range(0, len(qids), chunk):
                 sims = Q[lo : lo + chunk] @ C.T  # (q, c)
-                for j in range(sims.shape[0]):
-                    row = sims[j]
-                    if kk < len(ids):
-                        part = np.argpartition(-row, kk - 1)[:kk]
-                        kth = row[part].min()
-                        # every index scoring >= the kth value: exact
-                        # under boundary ties (argpartition's own tail
-                        # is arbitrary and could cut the wrong tied id)
-                        cand = np.nonzero(row >= kth)[0]
-                    else:
-                        cand = np.arange(len(ids))
-                    order = cand[np.lexsort((ids[cand], -row[cand]))][:kk]
-                    out_q.append(np.repeat(qids[lo + j], len(order)))
-                    out_i.append(ids[order])
-                    out_s.append(row[order])
+                sel = topk_indices(sims, ids, k, descending=True)
+                out_q.append(np.repeat(qids[lo : lo + chunk], sel.shape[1]))
+                out_i.append(ids[sel].ravel())
+                out_s.append(np.take_along_axis(sims, sel, axis=1).ravel())
             return pd.DataFrame(
                 {
                     "__qid": np.concatenate(out_q),
                     id_col: np.concatenate(out_i),
-                    "score": np.concatenate(out_s),
+                    "score": keep_nan(np.concatenate(out_s)),
                 }
             )
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from weaviate_txtai_spark.cache import scoped_persist
 from weaviate_txtai_spark.functions.text import fingerprint, shingles, tokens
 from weaviate_txtai_spark.functions.vector import cosine_sim
+from weaviate_txtai_spark.operators.topk import decode_vectors, unit_rows
 from weaviate_txtai_spark.sources.tables import spread
 
 
@@ -816,7 +817,7 @@ def embedding_dup_pairs_lsh(
                 pdf = pdf[pdf["__id"].notna()]
             if pdf.empty:
                 continue
-            mat = np.asarray(list(pdf["__v"]), dtype=np.float64)
+            mat = decode_vectors(pdf["__v"])
             bits = (mat @ proj) > 0
             bits = bits.reshape(len(pdf), num_tables, num_planes)
             buckets = (bits * weights).sum(axis=2)
@@ -832,10 +833,7 @@ def embedding_dup_pairs_lsh(
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["__id"].to_numpy()
-        mat = np.asarray(list(pdf["__v"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = 1.0
-        mat = mat / norms[:, None]
+        mat = unit_rows(decode_vectors(pdf["__v"]))
         out_d1, out_d2, out_cos = [], [], []
         chunk = 1024
         for lo in range(0, len(ids), chunk):

@@ -39,11 +39,17 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.operators.ann import IVFIndex
 from weaviate_txtai_spark.operators.pq import PQModel, pq_encode, train_pq
+from weaviate_txtai_spark.operators.topk import (
+    decode_vectors,
+    keep_nan,
+    rank_top,
+    topk_indices,
+)
 
 
 @dataclass
@@ -328,7 +334,7 @@ class IVFPQIndex:
         shortlist: Optional[int] = 10,
         query_id_type=None,
         where=None,
-        strategy: str = "auto",
+        strategy: str = "gemm",
     ) -> DataFrame:
         """Batch ADC search: ``queries`` is [(query_id, vector), ...]
         (driver-side batch, same contract as ``knn_topk_gemm``). For
@@ -339,7 +345,7 @@ class IVFPQIndex:
         with exact squared L2 on the float corpus (broadcast semi-join —
         full-precision I/O is O(shortlist·n·Q), never O(corpus)).
 
-        ``strategy='auto'``/'gemm' (default) scores candidates with a
+        ``strategy='gemm'`` (default) scores candidates with a
         shuffle-free Arrow gather kernel — the LUT set rides in the
         kernel closure (bounded by the batch-query contract), the codes
         table is scanned once in place, the distance is m numpy gathers
@@ -378,12 +384,10 @@ class IVFPQIndex:
         # contract bounds Q (≲ 10^3), nprobe×m×k ≲ 10^4.
         lut_rows = []  # (qid, cell, lut)
         for qid, qv in queries:
-            q = np.asarray(list(qv), dtype=np.float64)
-            # probe by L2 distance to coarse centroids (deterministic
-            # ties to lowest cell id via lexsort)
+            q = np.asarray(qv, dtype=np.float64)
+            # probe by L2 distance to coarse centroids
             d = ((cmat - q) ** 2).sum(axis=1)
-            order = np.lexsort((np.asarray(cids), d))[:nprobe]
-            for idx in order:
+            for idx in topk_indices(d, cids, nprobe, descending=False):
                 res = (q - cmat[idx]).tolist()
                 lut_rows.append(
                     (qid, int(cids[idx]), self.pq.lut(res, round_decimals=6))
@@ -415,7 +419,7 @@ class IVFPQIndex:
                 StructField("__lut", ArrayType(ArrayType(DoubleType()))),
             ]
         )
-        if strategy not in ("auto", "gemm", "expr"):
+        if strategy not in ("gemm", "expr"):
             raise ValueError(f"IVFPQIndex.search: unknown strategy {strategy!r}")
         # `where` (over keep_cols stored IN the codes table at build
         # time) prunes candidates BEFORE the shortlist cut — top-n slots
@@ -456,13 +460,8 @@ class IVFPQIndex:
             )
         else:
             cand = self._adc_candidates_gemm(base, lut_rows, lut_schema, take)
-        w = Window.partitionBy("__qid").orderBy(
-            F.asc("adc_dist"), F.asc(self.id_col)
-        )
-        top = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= take)
-        )
+        top = rank_top(cand, take, key="adc_dist", id_col=self.id_col,
+                       descending=False, by="__qid")
         if shortlist is None:
             return top.select(
                 F.col("__qid").alias("query_id"),
@@ -509,16 +508,9 @@ class IVFPQIndex:
                 ).alias("dist"),
             )
         )
-        w2 = Window.partitionBy("__qid").orderBy(
-            F.asc("dist"), F.asc(self.id_col)
-        )
-        return (
-            exact.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= n)
-            .select(
-                F.col("__qid").alias("query_id"), self.id_col, "dist", "rank"
-            )
-        )
+        return rank_top(
+            exact, n, key="dist", id_col=self.id_col, descending=False, by="__qid"
+        ).select(F.col("__qid").alias("query_id"), self.id_col, "dist", "rank")
 
     def search_df(
         self,
@@ -543,9 +535,8 @@ class IVFPQIndex:
         is just the PQ codebooks + coarse centroids — k·dim floats, the
         same bounded contract as the index itself) and scores the
         cell's code matrix with m gathers + adds per query, emitting
-        only per-group top-``take`` rows — (adc_dist, id) is a strict
-        total order, so the global merge window is exact over the
-        per-group winners. When ``shortlist`` is set, the merged
+        only per-group top-``take`` rows (``topk_indices``), which the
+        global merge window ranks exactly. When ``shortlist`` is set, the merged
         shortlist re-ranks against the float corpus via two equi-joins
         and a vectorized Arrow distance kernel (never an interpreted
         per-pair fold), then cuts to top-n.
@@ -576,7 +567,7 @@ class IVFPQIndex:
             # map-only Arrow GEMM probe (VERDICT r5 item 4): the expr twin
             # below shuffles Q × nlist rows through a window and evaluates
             # an interpreted zip_with/aggregate fold per pair — and nlist
-            # grows ∝ √N. Same (dist ASC, cell ASC) rule after rounding.
+            # grows ∝ √N.
             from weaviate_txtai_spark.operators.ann import probe_cells_gemm
 
             probes = probe_cells_gemm(
@@ -589,8 +580,7 @@ class IVFPQIndex:
             )
         elif probe_strategy == "expr":
             # probe fan-out: queries × nlist centroids (tiny broadcast
-            # crossJoin), window top-nprobe by (L2 asc, cell asc) — the
-            # same deterministic rule the driver-batch path uses (lexsort)
+            # crossJoin), window top-nprobe by L2 distance
             cent = spark.createDataFrame(
                 [(int(c), [float(x) for x in v]) for c, v in cents],
                 "cell int, __cent array<double>",
@@ -607,20 +597,16 @@ class IVFPQIndex:
                 ),
                 9,
             )
-            wprobe = Window.partitionBy("__qid").orderBy(
-                F.asc("__cd"), F.asc("cell")
-            )
-            probes = (
+            probes = rank_top(
                 query_df.select(
                     F.col(query_id_col).alias("__qid"),
                     F.col(query_vector_col).cast("array<double>").alias("__qv"),
                 )
                 .crossJoin(F.broadcast(cent))
-                .withColumn("__cd", l2)
-                .withColumn("__pr", F.row_number().over(wprobe))
-                .filter(F.col("__pr") <= min(nprobe, len(cents)))
-                .select("__qid", "__qv", "cell")
-            )
+                .withColumn("__cd", l2),
+                min(nprobe, len(cents)), key="__cd", id_col="cell",
+                descending=False, by="__qid",
+            ).select("__qid", "__qv", "cell")
         else:
             raise ValueError(
                 f"search_df: unknown probe_strategy {probe_strategy!r}"
@@ -669,11 +655,11 @@ class IVFPQIndex:
         def score(cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
             if cpdf.empty or qpdf.empty:
                 return pd.DataFrame({"__qid": [], id_col: [], "adc_dist": []})
-            codes = np.asarray(list(cpdf["pq_code"]), dtype=np.int64)
+            codes = decode_vectors(cpdf["pq_code"], np.int64)
             ids = cpdf[id_col].to_numpy()
             cell = int(cpdf["cell"].iloc[0])
             centv = cent_map[cell]
-            qmat = np.asarray(list(qpdf["__qv"]), dtype=np.float64)
+            qmat = decode_vectors(qpdf["__qv"])
             qids = qpdf["__qid"].to_numpy()
             res = qmat - centv[None, :]  # (q, dim) residuals
             out_q, out_i, out_d = [], [], []
@@ -696,14 +682,7 @@ class IVFPQIndex:
                     for s in range(m):
                         dist = dist + luts[s][j][codes[:, s]]
                     dist = np.round(dist, 6)
-                    t = min(take, len(ids))
-                    if t < len(ids):
-                        part = np.argpartition(dist, t - 1)[:t]
-                        kth = dist[part].max()
-                        cand = np.nonzero(dist <= kth)[0]
-                    else:
-                        cand = np.arange(len(ids))
-                    order = cand[np.lexsort((ids[cand], dist[cand]))][:t]
+                    order = topk_indices(dist, ids, take, descending=False)
                     out_q.append(np.repeat(qids[lo + j], len(order)))
                     out_i.append(ids[order])
                     out_d.append(dist[order])
@@ -711,7 +690,7 @@ class IVFPQIndex:
                 {
                     "__qid": np.concatenate(out_q),
                     id_col: np.concatenate(out_i),
-                    "adc_dist": np.concatenate(out_d),
+                    "adc_dist": keep_nan(np.concatenate(out_d)),
                 }
             )
 
@@ -723,13 +702,8 @@ class IVFPQIndex:
                 schema=f"__qid {qid_ddl}, {id_col} {id_ddl}, adc_dist double",
             )
         )
-        w = Window.partitionBy("__qid").orderBy(
-            F.asc("adc_dist"), F.asc(id_col)
-        )
-        top = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= take)
-        )
+        top = rank_top(cand, take, key="adc_dist", id_col=id_col,
+                       descending=False, by="__qid")
         if shortlist is None:
             return top.select(
                 F.col("__qid").alias(query_id_col),
@@ -764,28 +738,23 @@ class IVFPQIndex:
             for pdf in batches:
                 if pdf.empty:
                     continue
-                dv = np.asarray(list(pdf["__dv"]), dtype=np.float64)
-                qv = np.asarray(list(pdf["__qv"]), dtype=np.float64)
+                dv = decode_vectors(pdf["__dv"])
+                qv = decode_vectors(pdf["__qv"])
                 dist = np.round(((dv - qv) ** 2).sum(axis=1), 6)
                 yield pd.DataFrame(
                     {
                         "__qid": pdf["__qid"],
                         id_col: pdf[id_col],
-                        "dist": dist,
+                        "dist": keep_nan(dist),
                     }
                 )
 
         exact_df = pairs.mapInPandas(
             exact, schema=f"__qid {qid_ddl}, {id_col} {id_ddl}, dist double"
         )
-        w2 = Window.partitionBy("__qid").orderBy(F.asc("dist"), F.asc(id_col))
-        return (
-            exact_df.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= n)
-            .select(
-                F.col("__qid").alias(query_id_col), id_col, "dist", "rank"
-            )
-        )
+        return rank_top(
+            exact_df, n, key="dist", id_col=id_col, descending=False, by="__qid"
+        ).select(F.col("__qid").alias(query_id_col), id_col, "dist", "rank")
 
     def _adc_candidates_gemm(
         self, base: DataFrame, lut_rows: list, lut_schema, take: int
@@ -798,9 +767,8 @@ class IVFPQIndex:
         probing query's distances (m gathers + adds accumulated in
         subspace order — the expr fold's op sequence, equal up to the
         np.round/F.round midpoint caveat), and emits
-        only each query's top-``take`` rows within the batch.
-        (adc_dist, id) is a strict total order, so the per-batch cut is
-        exact under the global merge window, which then sees
+        only each query's top-``take`` rows within the batch
+        (``topk_indices``), so the global merge window sees
         O(batches·Q·take) rows, never O(candidates).
 
         Probed cells are pruned driver-side BEFORE the scan (a static
@@ -831,7 +799,7 @@ class IVFPQIndex:
             for pdf in batches:
                 if pdf.empty:
                     continue
-                codes = np.asarray(list(pdf["pq_code"]), dtype=np.int64)
+                codes = decode_vectors(pdf["pq_code"], np.int64)
                 ids = pdf[id_col].to_numpy()
                 cells = pdf["cell"].to_numpy()
                 out = {}  # qid -> [(dist_arr, id_arr)]
@@ -854,14 +822,7 @@ class IVFPQIndex:
                 for qid, parts in out.items():
                     dist = np.concatenate([d for d, _ in parts])
                     pids = np.concatenate([i for _, i in parts])
-                    t = min(take, len(pids))
-                    if t < len(pids):
-                        part = np.argpartition(dist, t - 1)[:t]
-                        kth = dist[part].max()
-                        cand = np.nonzero(dist <= kth)[0]
-                    else:
-                        cand = np.arange(len(pids))
-                    order = cand[np.lexsort((pids[cand], dist[cand]))][:t]
+                    order = topk_indices(dist, pids, take, descending=False)
                     out_q.append(np.repeat(qid, len(order)))
                     out_i.append(pids[order])
                     out_d.append(dist[order])
@@ -869,7 +830,7 @@ class IVFPQIndex:
                     {
                         "__qid": np.concatenate(out_q),
                         id_col: np.concatenate(out_i),
-                        "adc_dist": np.concatenate(out_d),
+                        "adc_dist": keep_nan(np.concatenate(out_d)),
                     }
                 )
 

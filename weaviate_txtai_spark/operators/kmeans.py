@@ -44,11 +44,12 @@ from typing import Iterator, Optional, Sequence
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from weaviate_txtai_spark.functions.vector import cosine_sim
+from weaviate_txtai_spark.operators.topk import decode_vectors, rank_top, unit_rows
 
 Centroids = Sequence[tuple[int, Sequence[float]]]
 
@@ -184,7 +185,7 @@ def assign_clusters(
                     f"assign_clusters: NULL or non-{dim}-dim vector in "
                     f"'{vector_col}' ({int(bad.sum())} rows in batch)"
                 )
-            mat = np.asarray(list(pdf[vector_col]), dtype=np.float64)  # (n, dim)
+            mat = decode_vectors(pdf[vector_col])  # (n, dim)
             # |x-c|^2 = |x|^2 - 2 x·c + |c|^2; |x|^2 is constant per row so
             # argmin needs only the last two terms — one GEMM per batch
             scores = c_sq[None, :] - 2.0 * (mat @ cmat.T)  # (n, k)
@@ -506,10 +507,7 @@ def _cluster_pairs_gemm(
     def score_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["__id"].to_numpy()
         cl = int(pdf["cluster"].iloc[0])
-        mat = np.asarray(list(pdf["__vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = 1.0
-        mat = mat / norms[:, None]
+        mat = unit_rows(decode_vectors(pdf["__vec"]))
         out_d1, out_d2, out_cos = [], [], []
         chunk = 1024
         for lo in range(0, len(ids), chunk):
@@ -617,9 +615,6 @@ def cluster_top_terms(
         .groupBy(cluster_col, "term")
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
-    w = Window.partitionBy(cluster_col).orderBy(F.desc("n_occ"), F.asc("term"))
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_terms)
-        .select(cluster_col, "rank", "term", "n_occ")
-    )
+    return rank_top(
+        counts, n_terms, key="n_occ", id_col="term", descending=True, by=cluster_col
+    ).select(cluster_col, "rank", "term", "n_occ")

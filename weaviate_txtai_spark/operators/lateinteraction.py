@@ -31,12 +31,19 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     StructField,
     StructType,
+)
+
+from weaviate_txtai_spark.operators.topk import (
+    decode_vectors,
+    keep_nan,
+    rank_top,
+    unit_rows,
 )
 
 
@@ -75,10 +82,7 @@ def maxsim_scores(
     if not qrows:
         raise ValueError("maxsim_scores: empty query_tokens")
     qids_all = [r[0] for r in qrows]
-    qmat = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qn[qn == 0.0] = 1.0
-    qmat = qmat / qn
+    qmat = unit_rows(np.asarray([list(r[1]) for r in qrows], dtype=np.float64))
     # segment boundaries: one output score per distinct query id
     uniq = sorted(set(qids_all))
     qidx = {q: i for i, q in enumerate(uniq)}
@@ -96,10 +100,7 @@ def maxsim_scores(
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         did = pdf["__did"].iloc[0]
-        mat = np.asarray(list(pdf["__dv"]), dtype=np.float64)
-        dn = np.linalg.norm(mat, axis=1, keepdims=True)
-        dn[dn == 0.0] = 1.0
-        sims = (mat / dn) @ qmat.T  # (d_tokens, q_tokens)
+        sims = unit_rows(decode_vectors(pdf["__dv"])) @ qmat.T  # (d_tokens, q_tokens)
         tok_max = sims.max(axis=0)  # (q_tokens,)
         scores = np.zeros(len(uniq))
         np.add.at(scores, seg, tok_max)
@@ -107,7 +108,7 @@ def maxsim_scores(
             {
                 "query_id": uniq,
                 "doc_id": did,
-                "score": np.round(scores, decimals),
+                "score": keep_nan(np.round(scores, decimals)),
             }
         )
 
@@ -129,8 +130,8 @@ def maxsim_topk(
     decimals: int = 6,
 ) -> DataFrame:
     """Top-k documents per query by MaxSim: ``maxsim_scores`` then the
-    repo's deterministic (score DESC, doc ASC) per-query window on the
-    ROUNDED score. Output: query_id, doc_id, score, rank."""
+    ``rank_top`` per-query window on the ROUNDED score. Output:
+    query_id, doc_id, score, rank."""
     scored = maxsim_scores(
         query_tokens,
         doc_tokens,
@@ -140,10 +141,5 @@ def maxsim_topk(
         doc_vec=doc_vec,
         decimals=decimals,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_top(scored, k, key="score", id_col="doc_id", descending=True,
+                    by="query_id")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from weaviate_txtai_spark.operators.topk import decode_vectors
+
 
 def mmr_select(
     candidates: DataFrame,
@@ -75,7 +77,7 @@ def mmr_select(
         # no dtype coercion: object arrays (strings) sort and index fine
         ids = pdf[id_col].to_numpy()
         rel = pdf[score_col].to_numpy(dtype="float64")
-        mat = np.asarray(list(pdf[vector_col]), dtype="float64")
+        mat = decode_vectors(pdf[vector_col])
         q = pdf[query_col].iloc[0]
         n = len(ids)
         # order by id so every argmax tie resolves to the LOWEST id via

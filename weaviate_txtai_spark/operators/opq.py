@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.operators.pq import PQModel, train_pq
+from weaviate_txtai_spark.operators.topk import decode_vectors
 
 
 @dataclass
@@ -67,7 +68,7 @@ def _rotate_df(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.asarray(list(pdf[vector_col]), dtype=np.float64)
+            mat = decode_vectors(pdf[vector_col])
             y = mat @ R
             pdf = pdf[in_cols].copy()
             pdf[out_col] = [row.tolist() for row in y]
@@ -135,7 +136,7 @@ def train_opq(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                X = np.asarray(list(pdf["__x"]), dtype=np.float64)
+                X = decode_vectors(pdf["__x"])
                 Y = X @ R
                 Yhat = np.empty_like(Y)
                 for s in range(m):
@@ -207,7 +208,7 @@ def opq_topk(
     *,
     id_col: str = "vec_id",
     code_col: str = "pq_code",
-    strategy: str = "auto",
+    strategy: str = "gemm",
 ) -> DataFrame:
     """ADC top-n under the rotation: the query is rotated driver-side
     (dim² flops) and searched with the plain PQ machinery — orthogonal
@@ -247,7 +248,7 @@ def reconstruction_error(
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = np.asarray(list(pdf["__x"]), dtype=np.float64)
+            X = decode_vectors(pdf["__x"])
             Y = X @ R
             tot = 0.0
             for s in range(m):
@@ -341,7 +342,7 @@ class IVFOPQIndex:
 
         R = np.asarray(self.rotation, dtype=np.float64)
         return [
-            (qid, (np.asarray(list(qv), dtype=np.float64) @ R).tolist())
+            (qid, (np.asarray(qv, dtype=np.float64) @ R).tolist())
             for qid, qv in queries
         ]
 

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from weaviate_txtai_spark.operators.topk import decode_vectors
+
 
 def _moments(df: DataFrame, vector_col: str, dim: int):
     """One pass: returns (n, sum_vec (dim,), gram (dim, dim)) as numpy.
@@ -61,7 +63,7 @@ def _moments(df: DataFrame, vector_col: str, dim: int):
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.asarray(list(pdf[vector_col]), dtype=np.float64)
+            mat = decode_vectors(pdf[vector_col])
             if mat.ndim != 2 or mat.shape[1] != dim:
                 raise ValueError(
                     f"pca: expected {dim}-dim vectors, got shape {mat.shape}"

@@ -48,10 +48,16 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.operators.kmeans import assign_clusters
+from weaviate_txtai_spark.operators.topk import (
+    decode_vectors,
+    keep_nan,
+    rank_top,
+    topk_indices,
+)
 
 
 @dataclass
@@ -169,7 +175,7 @@ def train_pq(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                mat = np.asarray(list(pdf["__v"]), dtype=np.float64)
+                mat = decode_vectors(pdf["__v"])
                 n = mat.shape[0]
                 sums = np.zeros((m, k, d))
                 cnts = np.zeros((m, k), dtype=np.int64)
@@ -347,7 +353,7 @@ def _pq_encode_fused(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.asarray(list(pdf[vector_col]), dtype=np.float64)
+            mat = decode_vectors(pdf[vector_col])
             if mat.ndim != 2 or mat.shape[1] != model.dim:
                 raise ValueError(
                     f"pq_encode: NULL or non-{model.dim}-dim vector in "
@@ -442,9 +448,8 @@ def _adc_scores_gemm(
     lut_round_decimals: Optional[int] = 6,
 ) -> DataFrame:
     """Arrow gather-kernel twin of :func:`adc_scores`, pre-reduced:
-    emits each input batch's top-n (adc_dist asc, id asc) rows only —
-    (adc_dist, id) is a strict total order, so the per-batch cut is
-    exact and the downstream global top-n sees O(batches·n) rows.
+    emits each input batch's top-n rows only (``topk_indices``), so the
+    downstream global top-n sees O(batches·n) rows.
 
     Parity with the expr path: the kernel gathers the SAME rounded LUT
     entries and accumulates them in the SAME subspace order
@@ -473,21 +478,14 @@ def _adc_scores_gemm(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.asarray(list(pdf[code_col]), dtype=np.int64)  # (B, m)
+            mat = decode_vectors(pdf[code_col], np.int64)  # (B, m)
             ids = pdf[id_col].to_numpy()
             dist = np.zeros(len(ids), dtype=np.float64)
             for s in range(m):
                 dist = dist + lut[s][mat[:, s]]
             dist = np.round(dist, 6)
-            t = min(n, len(ids))
-            if t < len(ids):
-                part = np.argpartition(dist, t - 1)[:t]
-                kth = dist[part].max()
-                cand = np.nonzero(dist <= kth)[0]
-            else:
-                cand = np.arange(len(ids))
-            order = cand[np.lexsort((ids[cand], dist[cand]))][:t]
-            yield pd.DataFrame({id_col: ids[order], "adc_dist": dist[order]})
+            order = topk_indices(dist, ids, n, descending=False)
+            yield pd.DataFrame({id_col: ids[order], "adc_dist": keep_nan(dist[order])})
 
     return codes.select(id_col, code_col).mapInPandas(
         kernel, schema=f"{id_col} {id_ddl}, adc_dist double"
@@ -502,7 +500,7 @@ def adc_topk(
     *,
     id_col: str = "vec_id",
     code_col: str = "pq_code",
-    strategy: str = "auto",
+    strategy: str = "gemm",
 ) -> DataFrame:
     """Top-n rows by ADC distance (ascending; ties to lowest id) — the
     PQ search primitive. orderBy+limit compiles to
@@ -510,12 +508,12 @@ def adc_topk(
     the corpus never lands on a single task); the rank window then runs
     over only the n survivors.
 
-    ``strategy='auto'``/'gemm' (default) scores via the Arrow gather
+    ``strategy='gemm'`` (default) scores via the Arrow gather
     kernel with per-batch top-n pre-reduction; 'expr' keeps the
     interpreted ``aggregate`` fold (the oracle/exactness twin — same
     values bitwise, ~10× slower on the scan stage; see
     :func:`adc_scores`)."""
-    if strategy not in ("auto", "gemm", "expr"):
+    if strategy not in ("gemm", "expr"):
         raise ValueError(f"adc_topk: unknown strategy {strategy!r}")
     # NULL-id rows are excluded up front (r13 join census): results are
     # keyed by id, and in adc_topk_rerank an unkeyed shortlist row can
@@ -531,9 +529,7 @@ def adc_topk(
         scored = _adc_scores_gemm(
             codes, model, query, n, id_col=id_col, code_col=code_col
         )
-    top = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(n)
-    w = Window.orderBy(F.asc("adc_dist"), F.asc(id_col))
-    return top.withColumn("rank", F.row_number().over(w))
+    return rank_top(scored, n, key="adc_dist", id_col=id_col, descending=False)
 
 
 def adc_topk_rerank(
@@ -567,25 +563,19 @@ def adc_topk_rerank(
         codes, model, q, shortlist * n, id_col=id_col, code_col=code_col
     ).select(id_col)
     lit = F.array(*[F.lit(v) for v in q])
-    exact = (
-        vectors.join(F.broadcast(cand), id_col)
-        .select(
-            id_col,
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vector_col).cast("array<double>"),
-                        lit,
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
+    exact = vectors.join(F.broadcast(cand), id_col).select(
+        id_col,
+        F.round(
+            F.aggregate(
+                F.zip_with(
+                    F.col(vector_col).cast("array<double>"),
+                    lit,
+                    lambda a, b: (a - b) * (a - b),
                 ),
-                6,
-            ).alias("dist"),
-        )
-        .orderBy(F.asc("dist"), F.asc(id_col))
-        .limit(n)
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ),
+            6,
+        ).alias("dist"),
     )
-    w = Window.orderBy(F.asc("dist"), F.asc(id_col))
-    return exact.withColumn("rank", F.row_number().over(w))
+    return rank_top(exact, n, key="dist", id_col=id_col, descending=False)

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.functions.vector import cosine_sim
-from weaviate_txtai_spark.operators.topk import knn_topk
+from weaviate_txtai_spark.operators.topk import decode_vectors, knn_topk, unit_rows
 
 
 def topk_join(
@@ -560,7 +560,7 @@ def _threshold_join_bucketed(
             if npl == 0:
                 buckets = np.zeros((n, nt), dtype=np.int64)
             else:
-                mat = np.asarray(list(pdf["__v"]), dtype=np.float64)
+                mat = decode_vectors(pdf["__v"])
                 bits = (mat @ proj) > 0
                 bits = bits.reshape(n, nt, npl)
                 buckets = (bits * weights[:npl]).sum(axis=2)
@@ -581,12 +581,8 @@ def _threshold_join_bucketed(
             return pd.DataFrame(
                 {left_id: [], right_id: [], "score": []}
             ).astype({"score": "float64"})
-        lmat = np.asarray(list(lpdf["__v"]), dtype=np.float64)
-        rmat = np.asarray(list(rpdf["__v"]), dtype=np.float64)
-        for m in (lmat, rmat):
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0.0] = 1.0
-            m /= norms[:, None]
+        lmat = unit_rows(decode_vectors(lpdf["__v"]))
+        rmat = unit_rows(decode_vectors(rpdf["__v"]))
         lids = lpdf["__lid"].to_numpy()
         rids = rpdf["__rid"].to_numpy()
         out_l, out_r, out_s = [], [], []

@@ -14,21 +14,30 @@ Physical strategy (designed for 100 TB / 1000 executors):
   note the HOF fold inside it evaluates interpreted — see
   ``functions/vector.py`` — which is why ``knn_topk_gemm`` is the
   many-query path).
-- Top-k per query = window ``row_number() <= k`` partitioned by query id.
-  The map-side is embarrassingly parallel; the only shuffle is the final
-  (num_queries × k × partitions)-row merge, which AQE coalesces.
+- Top-k per query = window ``row_number() <= k`` partitioned by query id
+  (``rank_top``). The map-side is embarrassingly parallel; the only
+  shuffle is the final (num_queries × k × partitions)-row merge, which
+  AQE coalesces.
 - For a single query we use ``orderBy().limit(k)`` which Catalyst plans as
   ``TakeOrderedAndProject`` — per-partition heaps + driver merge, zero
   shuffle.
 - ``knn_topk_gemm`` is the scale path for large query batches: Arrow-batched
   numpy GEMM over ``mapInPandas`` with per-partition top-k reduction, so the
   rows crossing the final shuffle are k per (query, partition), never M×N.
+
+Every vector tier (this module, ``ann``, ``ivfpq``, ``pq``,
+``lateinteraction``) ranks with the same two-level top-k built from the
+helpers below: ``topk_indices`` cuts each Arrow batch or cogroup locally,
+``keep_nan`` carries the kept keys out of the kernel, and ``rank_top``
+merges the survivors in Spark. ``decode_vectors`` and ``unit_rows`` are
+the kernels' shared list-column decode and zero-norm row normalisation.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -41,6 +50,89 @@ from pyspark.sql.types import (
 )
 
 from weaviate_txtai_spark.functions.vector import cosine_sim
+
+
+def decode_vectors(values, dtype=np.float64) -> np.ndarray:
+    """An Arrow batch's list column (a pandas Series of arrays) as one
+    2-D numpy matrix, a row per vector."""
+    return np.asarray(list(values), dtype=dtype)
+
+
+def unit_rows(mat: np.ndarray) -> np.ndarray:
+    """``mat`` with every row scaled to unit L2 norm. A zero row stays
+    zero, so it scores 0 against everything instead of NaN — the numpy
+    twin of ``functions.vector.cosine_sim``'s zero-norm guard."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    return mat / norms
+
+
+def keep_nan(values) -> pd.api.extensions.ExtensionArray:
+    """A kernel's output float column that crosses the pandas → Arrow
+    boundary with NaN intact. A plain float64 column arrives in Spark
+    with NaN turned into NULL, which ranks last under DESC and first
+    under ASC: the opposite end from where Spark ranks a NaN key."""
+    values = np.asarray(values, dtype=np.float64)
+    return pd.arrays.FloatingArray(values, np.zeros(values.shape, dtype=bool))
+
+
+def topk_indices(keys, ids, k: int, *, descending: bool) -> np.ndarray:
+    """Positions of the top-``k`` entries of a 1-D key vector, or of
+    every row of a 2-D key matrix (shape ``(rows, min(k, n))``), in rank
+    order. ``ids`` holds one id per key column.
+
+    The order is exactly the one ``rank_top`` applies in Spark: key DESC
+    (``descending``) or ASC, ties by id ASC, NaN above every number and
+    -0.0 equal to 0.0 (Spark's double ordering). Because each batch or
+    group then keeps precisely the rows the final window would keep from
+    it, the two-level top-k is exact for any partitioning. argpartition
+    alone keeps arbitrary members of a tie group at the k-th place, so
+    the cut widens to every entry tied with the k-th key before the
+    exact sort.
+    """
+    mat = np.atleast_2d(np.asarray(keys, dtype=np.float64))
+    ids = np.asarray(ids)
+    nrows, n = mat.shape
+    kk = max(0, min(int(k), n))
+    nan = np.isnan(mat)
+    # ascending and NaN-free; ``late`` splits NaN from a tied ±inf
+    asc = np.where(nan, -np.inf if descending else np.inf,
+                   -mat if descending else mat)
+    late = nan != descending
+    if kk == 0:
+        r = c = np.empty(0, dtype=np.intp)
+    elif kk < n:
+        part = np.argpartition(asc, kk - 1, axis=1)[:, :kk]
+        kth = np.take_along_axis(asc, part, axis=1).max(axis=1, keepdims=True)
+        r, c = np.nonzero(asc <= kth)
+    else:
+        r, c = np.nonzero(np.ones(mat.shape, dtype=bool))
+    order = np.lexsort((ids[c], asc[r, c], late[r, c], r))
+    r, c = r[order], c[order]
+    pos = np.arange(len(r)) - np.searchsorted(r, np.arange(nrows))[r]
+    out = c[pos < kk].reshape(nrows, kk)
+    return out if np.ndim(keys) == 2 else out[0]
+
+
+def rank_top(
+    df: DataFrame,
+    k: int,
+    *,
+    key: str,
+    id_col: str,
+    descending: bool,
+    by: "str | None" = None,
+) -> DataFrame:
+    """Spark side of ``topk_indices``: rank rows by (``key`` DESC|ASC,
+    ``id_col`` ASC) and keep the first ``k``. With ``by``, a window per
+    group cut by ``rank <= k``; without, one global top-k planned as
+    TakeOrderedAndProject (orderBy + limit), ranked over the survivors."""
+    order = (F.desc(key) if descending else F.asc(key), F.asc(id_col))
+    if by is None:
+        top = df.orderBy(*order).limit(k)
+        return top.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def knn_topk(
@@ -75,11 +167,8 @@ def knn_topk(
     )
     if score_round is not None:
         scored = scored.withColumn("score", F.round("score", score_round))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_top(scored, k, key="score", id_col=id_col, descending=True,
+                    by=query_id_col)
 
 
 def knn_single(
@@ -179,8 +268,6 @@ def knn_topk_gemm(
 
     Output: query_id, docid, score, rank — same contract as knn_topk.
     """
-    import numpy as np
-
     if metric not in ("cosine", "l2"):
         raise ValueError(
             f"knn_topk_gemm: unknown metric {metric!r}; use 'cosine' or 'l2'"
@@ -188,7 +275,7 @@ def knn_topk_gemm(
 
     if isinstance(queries, pd.DataFrame):
         qids = queries.iloc[:, 0].to_numpy()
-        qmat = np.asarray(list(queries.iloc[:, 1]), dtype=np.float64)
+        qmat = decode_vectors(queries.iloc[:, 1])
     else:
         qids = np.asarray([q[0] for q in queries])
         qmat = np.asarray([q[1] for q in queries], dtype=np.float64)
@@ -212,9 +299,6 @@ def knn_topk_gemm(
                 ]
             ),
         )
-    # zero-norm guard matches the index side below: a zero query vector
-    # must score 0 everywhere (deterministic output), not NaN — NaN made
-    # the local top-k select nothing and SILENTLY dropped the query
     # one metric-specific auxiliary array: the kernel closure serializes
     # every captured local to every task, so computing BOTH the
     # normalized query matrix and the squared norms shipped an unused
@@ -222,9 +306,7 @@ def knn_topk_gemm(
     if metric == "l2":
         qaux = (qmat * qmat).sum(axis=1)  # (Q,) squared query norms
     else:
-        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qn[qn == 0.0] = 1.0
-        qaux = qmat / qn  # (Q, dim) normalized queries
+        qaux = unit_rows(qmat)  # (Q, dim) normalized queries
 
     # derive id types from the inputs: hardcoding LongType crashed the
     # Arrow serializer for string ids, making topk_join succeed or fail
@@ -243,61 +325,36 @@ def knn_topk_gemm(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.asarray(list(pdf[vector_col]), dtype=np.float64)
+            mat = decode_vectors(pdf[vector_col])
             if metric == "l2":
                 # ||x||² − 2 x·q + ||q||², clipped: fp cancellation can
                 # dip a true-zero distance to ~-1e-13 and sqrt would NaN
                 xsq = (mat * mat).sum(axis=1, keepdims=True)
                 d2 = xsq - 2.0 * (mat @ qmat.T) + qaux[None, :]
-                dists = np.sqrt(np.clip(d2, 0.0, None))  # (batch, Q)
+                scores = np.sqrt(np.clip(d2, 0.0, None))  # (batch, Q)
                 if dist_round_decimals is not None:
-                    # rank on the rounded key (see docstring) so the
-                    # local tie-widening, the lexsort, and the final
-                    # window all agree with an expr-side round
-                    dists = np.round(dists, dist_round_decimals)
-                sims = -dists  # shared top-k code keeps "larger is better"
+                    # rank on the rounded key (see docstring)
+                    scores = np.round(scores, dist_round_decimals)
             else:
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0.0] = 1.0
-                sims = (mat / norms) @ qaux.T  # (batch, Q)
+                scores = unit_rows(mat) @ qaux.T  # (batch, Q)
             ids = pdf[id_col].to_numpy()
-            kk = min(k, sims.shape[0])
-            # Local top-k per query. argpartition alone keeps ARBITRARY
-            # members of a score-tied group at the k boundary, which would
-            # make results differ from knn_topk's deterministic
-            # (score DESC, id ASC) tie-break depending on which path
-            # VectorIndex.search picks. So: partition for the threshold,
-            # widen to ALL rows at-or-above it (ties included), then
-            # lexsort (id ASC within score DESC) before cutting to k —
-            # bit-identical to the expression path for any tie pattern.
-            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (k, Q)
-            rows = []
-            for j in range(sims.shape[1]):
-                thresh = sims[part[:, j], j].min()
-                cand = np.flatnonzero(sims[:, j] >= thresh)
-                order = np.lexsort((ids[cand], -sims[cand, j]))[:kk]
-                sel = cand[order]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[j],
-                            id_col: ids[sel],
-                            # l2 emits the true distance, not the negated
-                            # ranking key the shared top-k code used
-                            "score": -sims[sel, j] if metric == "l2" else sims[sel, j],
-                        }
-                    )
-                )
-            yield pd.concat(rows, ignore_index=True)
+            scores = scores.T  # (Q, batch): one key row per query
+            sel = topk_indices(scores, ids, k, descending=metric == "cosine")
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(qids, sel.shape[1]),
+                    id_col: ids[sel].ravel(),
+                    "score": keep_nan(np.take_along_axis(scores, sel, axis=1).ravel()),
+                }
+            )
 
     from weaviate_txtai_spark.sources.tables import spread
 
     local = spread(index_df.select(id_col, vector_col)).mapInPandas(
         score_partition, schema=out_schema
     )
-    score_order = F.asc("score") if metric == "l2" else F.desc("score")
-    w = Window.partitionBy("query_id").orderBy(score_order, F.asc(id_col))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return rank_top(local, k, key="score", id_col=id_col,
+                    descending=metric == "cosine", by="query_id")
 
 
 def hamming_topk(
@@ -325,9 +382,7 @@ def hamming_topk(
     scored = codes.select(
         id_col, hamming_dist(F.col(code_col), qlit).alias("hamming")
     )
-    top = scored.orderBy(F.asc("hamming"), F.asc(id_col)).limit(n)
-    w = Window.orderBy(F.asc("hamming"), F.asc(id_col))
-    return top.withColumn("rank", F.row_number().over(w))
+    return rank_top(scored, n, key="hamming", id_col=id_col, descending=False)
 
 
 def hamming_topk_rerank(
@@ -353,14 +408,8 @@ def hamming_topk_rerank(
         codes, query_code, shortlist * n, id_col=id_col, code_col=code_col
     ).select(id_col)
     qlit = F.array(*[F.lit(float(v)) for v in query])
-    exact = (
-        vectors.join(F.broadcast(cand), id_col)
-        .select(
-            id_col,
-            F.round(cosine_sim(F.col(vector_col), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(n)
+    exact = vectors.join(F.broadcast(cand), id_col).select(
+        id_col,
+        F.round(cosine_sim(F.col(vector_col), qlit), 6).alias("score"),
     )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return exact.withColumn("rank", F.row_number().over(w))
+    return rank_top(exact, n, key="score", id_col=id_col, descending=True)
