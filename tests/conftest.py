@@ -13,8 +13,12 @@ targeted invocation (specific files, ``-k``, ``--collect-only``, …)
 runs exactly as before, as does any shard subprocess, so test semantics
 are unchanged — only the top-level scheduling is new.
 
+Each shard's output streams line by line with a ``[shard i]`` prefix,
+so a run cut by a timeout still shows where every shard was.
+
 Opt out with ``SPARK_GRAFT_TEST_SERIAL=1``; size the pool with
-``SPARK_GRAFT_TEST_WORKERS`` (default: min(8, cpus//4, n_files)).
+``SPARK_GRAFT_TEST_WORKERS`` (default: min(8, cpus//4 but at least 2,
+RAM // 5 GB, n_files)).
 """
 
 import glob
@@ -23,6 +27,7 @@ import re
 import subprocess
 import sys
 import tempfile
+import threading
 import time
 
 import pytest
@@ -67,17 +72,44 @@ def sf_dir():
 # ---------------------------------------------------------------------------
 
 
-def _whole_suite_args(args):
-    """True iff the positional args target the whole tests dir (or
-    nothing, with rootdir == repo root)."""
-    pos = [a for a in args if not a.startswith("-")]
-    if not pos:
-        return True
-    for a in pos:
+def _whole_suite(config):
+    """True iff pytest's parsed positional args (``config.args``: option
+    values such as ``-p no:cacheprovider`` are already consumed) name
+    only the tests dir or the repo root."""
+    for a in config.args:
         p = os.path.abspath(a.split("::")[0])
         if p not in (_TESTS_DIR, os.path.dirname(_TESTS_DIR)):
             return False
     return True
+
+
+# flags a shard repeats verbatim; anything else (selection, collection,
+# reporting flags that change semantics) means a normal serial run
+_PASSTHROUGH = {"-q", "--quiet", "-x", "--exitfirst", "-v",
+                "--continue-on-collection-errors"}
+# a shard's pytest holds a local[4] SparkSession with a 4g heap
+_SHARD_RAM = 5 << 30
+
+
+def _shard_flags(argv):
+    """The flags every shard repeats (with ``-p``'s value), or None when
+    argv holds a flag the parallel run cannot honour."""
+    out, it = [], iter(argv)
+    for a in it:
+        if a == "-p":
+            out += [a, next(it, "")]
+        elif a.startswith("-p") or a in _PASSTHROUGH:
+            out.append(a)
+        elif a.startswith("-"):
+            return None
+    return out
+
+
+def _default_workers(n_files):
+    """min(8, cpus//4 (at least 2), RAM // 5 GB, files), at least 1."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    cpus = os.cpu_count() or 8
+    return max(1, min(8, max(2, cpus // 4), ram // _SHARD_RAM, n_files))
 
 
 def _shards(files, n):
@@ -93,26 +125,31 @@ def _shards(files, n):
     return [s for s in shards if s]
 
 
+def _stream(i, proc, last, lock):
+    """Copy shard i's output to stdout line by line as it arrives, each
+    line prefixed ``[shard i]``; keep the shard's last non-empty line
+    (its pytest summary) in ``last[i]``."""
+    for line in proc.stdout:
+        if line.strip():
+            last[i] = line
+        with lock:
+            sys.stdout.write(f"[shard {i}] {line}")
+            sys.stdout.flush()
+
+
 def pytest_cmdline_main(config):
     if os.environ.get(_SHARD_ENV) or os.environ.get("SPARK_GRAFT_TEST_SERIAL"):
         return None  # worker shard / explicit serial: run normally
     argv = config.invocation_params.args
-    # bail to the normal path for anything that isn't a plain full-suite
-    # run (selection, collection, reporting flags that change semantics)
-    passthrough_ok = {"-q", "--quiet", "-x", "--exitfirst", "-p", "-v"}
-    flags = [a for a in argv if a.startswith("-")]
-    if not _whole_suite_args(argv):
+    flags = _shard_flags(argv)
+    if flags is None or not _whole_suite(config):
         return None
-    for fl in flags:
-        base = fl.split("=")[0]
-        if base not in passthrough_ok:
-            return None
     files = sorted(glob.glob(os.path.join(_TESTS_DIR, "test_*.py")))
     if len(files) < 4:
         return None
     n_workers = int(
         os.environ.get("SPARK_GRAFT_TEST_WORKERS", 0)
-    ) or max(2, min(8, (os.cpu_count() or 8) // 4, len(files)))
+    ) or _default_workers(len(files))
     exitfirst = any(a in ("-x", "--exitfirst") for a in argv)
 
     shards = _shards(files, n_workers)
@@ -121,22 +158,23 @@ def pytest_cmdline_main(config):
         f"[conftest] parallel run: {len(files)} files in {len(shards)} "
         f"shards (SPARK_GRAFT_TEST_SERIAL=1 to disable)\n"
     )
-    procs = []
-    outs = []
+    sys.stderr.flush()
+    procs, readers = [], []
+    last = [""] * len(shards)
+    lock = threading.Lock()
     for i, shard in enumerate(shards):
         env = dict(os.environ, **{_SHARD_ENV: str(i)})
-        out = tempfile.TemporaryFile(mode="w+")
-        cmd = [sys.executable, "-m", "pytest", "-q"]
-        if exitfirst:
-            cmd.append("-x")
-        cmd += shard
-        procs.append(
-            subprocess.Popen(
-                cmd, stdout=out, stderr=subprocess.STDOUT,
-                cwd=os.path.dirname(_TESTS_DIR), env=env,
-            )
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "pytest", *flags, *shard],
+            stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
+            bufsize=1, cwd=os.path.dirname(_TESTS_DIR), env=env,
         )
-        outs.append(out)
+        reader = threading.Thread(
+            target=_stream, args=(i, proc, last, lock), daemon=True
+        )
+        reader.start()
+        procs.append(proc)
+        readers.append(reader)
 
     rcs = [None] * len(procs)
     try:
@@ -155,21 +193,15 @@ def pytest_cmdline_main(config):
             if q.poll() is None:
                 q.terminate()
         raise
+    for r in readers:
+        r.join(timeout=10)
 
-    # merge worker outputs: progress lines stream poorly when parallel,
-    # so re-emit each worker's full (quiet) output in order — failures
-    # and the per-worker summary lines stay intact and greppable
     tally = {"passed": 0, "failed": 0, "skipped": 0, "error": 0,
              "errors": 0, "deselected": 0, "xfailed": 0, "xpassed": 0}
-    for i, out in enumerate(outs):
-        out.seek(0)
-        text = out.read()
-        sys.stdout.write(text)
-        for num, kind in re.findall(r"(\d+) (\w+)", text.split("\n")[-2] if
-                                    text.strip() else ""):
+    for line in last:
+        for num, kind in re.findall(r"(\d+) (\w+)", line):
             if kind in tally:
                 tally[kind] += int(num)
-        out.close()
     dur = time.time() - t0
     summary = ", ".join(f"{v} {k}" for k, v in tally.items() if v)
     worst = max((rc or 0) for rc in rcs)

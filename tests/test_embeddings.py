@@ -355,6 +355,120 @@ def test_metadata_arrays_survive_as_arrays(spark):
     assert isinstance(rows[0]["tags"], list) and "a" in rows[0]["tags"]
 
 
+def _counted(spark, fn):
+    """(fn(), jobs, tasks): the Spark jobs fn launched, counted through
+    a job group of its own and ``statusTracker()``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"emb-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "embeddings test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+    tasks = sum(st.getStageInfo(s).numCompletedTasks for s in stages)
+    return out, len(jobs), tasks
+
+
+def test_empty_upsert_runs_no_job(spark, emb):
+    df, mutations = emb._df, emb._mutations
+    _, jobs, _ = _counted(spark, lambda: emb.upsert([]))
+    assert jobs == 0
+    assert emb._df is df and emb._mutations == mutations
+    assert emb.offset == len(DATA)
+    # also before anything is indexed
+    fresh = Embeddings(spark)
+    fresh.upsert([])
+    assert not fresh.exists() and fresh.offset == 0
+
+
+def test_noop_delete_keeps_frame_and_ann_index(spark):
+    ivf = Embeddings(
+        spark, config={"backend": "ivf", "ivf": {"nlist": 2, "nprobe": 2}}
+    )
+    docs = _docs(20)
+    ivf.index(docs)
+    ivf.search(docs[0][1], 1)
+    df, mutations, idx = ivf._df, ivf._mutations, ivf._ann
+    _, jobs, _ = _counted(spark, lambda: ivf.delete([]))
+    assert jobs == 0
+    assert ivf.delete(["no-such-id", "nor-this"]) == []
+    assert ivf._df is df and ivf._mutations == mutations
+    ivf.search(docs[1][1], 1)
+    assert ivf._ann is idx  # the cached IVF index was not thrown away
+    assert ivf.count() == len(docs)
+
+
+def test_mutation_job_budget_and_partitions(spark):
+    """Every upsert/delete is one narrow pass over a filled corpus:
+    at most 4 jobs whatever its position in the run, no job touching
+    more partitions than the corpus has, and a partition count that
+    does not grow with the number of mutations. 17 mutations cross the
+    old 8-mutation checkpoint positions twice."""
+    e = Embeddings(spark)
+    e.index([(f"d{i}", f"base document number {i} about topic {i % 7}", None)
+             for i in range(300)])
+    parts = e._df.rdd.getNumPartitions()
+    mirror = {f"d{i}": i for i in range(300)}  # id -> docid
+    offset = 300
+    for k in range(17):
+        live = sorted(mirror)
+        pick = [live[(37 * k + 11 * j) % len(live)] for j in range(2)]
+        if k % 4 == 1:
+            out, jobs, tasks = _counted(
+                spark, lambda: e.delete(pick + ["absent"]))
+            assert sorted(out) == sorted(pick)
+            for u in pick:
+                del mirror[u]
+        else:
+            rows = [(u, f"rewritten text {k} {u}", None)
+                    for u in pick + [f"n{k}"]]
+            _, jobs, tasks = _counted(spark, lambda: e.upsert(rows))
+            for i, (u, _, _) in enumerate(rows):
+                mirror[u] = offset + i
+            offset += len(rows)
+        assert jobs <= 4, f"mutation {k}: {jobs} jobs"
+        assert tasks <= jobs * parts, f"mutation {k}: {tasks} tasks"
+    assert e._df.rdd.getNumPartitions() <= parts
+    got = {r["id"]: r["docid"] for r in e._df.select("id", "docid").collect()}
+    assert got == mirror and e.offset == offset
+
+
+def test_one_corpus_frame_held(spark):
+    """After index() and after each of 10 mutations the facade holds
+    exactly one filled frame in executor storage: each superseded
+    corpus is released when its successor is filled, not when GC gets
+    to it. Asserted on the change against a snapshot, since the Spark
+    application is shared with other tests."""
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+
+    def held():
+        new = [i for i in sc.getRDDStorageInfo() if i.id() not in before]
+        assert len(new) == 1, f"{len(new)} corpus frames held"
+        assert new[0].numCachedPartitions() == new[0].numPartitions()
+        return new[0].id()
+
+    e = Embeddings(spark)
+    e.index([(f"d{i}", f"document {i}", None) for i in range(40)])
+    frames = [held()]
+    for k in range(10):
+        if k % 3 == 2:
+            assert e.delete([f"d{k}"]) == [f"d{k}"]
+        else:
+            e.upsert([(f"d{k}", f"new text {k}", None), (f"m{k}", "more", None)])
+        frames.append(held())
+    e.search("document 7", 3)
+    assert held() == frames[-1]
+    assert len(set(frames)) == 11  # every mutation replaced the frame
+
+
 # ------------------------------------------------------------- IVF backend
 
 def _docs(n=60):

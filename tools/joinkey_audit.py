@@ -120,9 +120,6 @@ VALUE_SEMANTICS = {
     "pit_join": "caller-chosen `how` IS the NULL contract; NULL "
                 "valid_to is handled explicitly (open interval)",
     "salted_join": "semantics-preserving twin of .join(keys, how)",
-    "Embeddings.delete": "ids stringified (never NULL); a NULL-id "
-                         "corpus row is unaddressable and the "
-                         "anti-join keeps it (r12 left_anti census)",
     "fs_weights_blocked": "NULL block key = unblockable record, "
                           "standard linkage blocking semantics",
     "fs_pattern_counts_blocked": "same blocking semantics",

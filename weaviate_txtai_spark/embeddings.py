@@ -20,13 +20,21 @@ Spark-first design decisions:
   through two systems (txtai SQLite + Weaviate) collapses into column
   projection (SURVEY §1.1).
 - docids are **dense** from the running offset, matching the reference's
-  counter (reference weaviate_txtai/ann/weaviate.py:67,143,149), and
-  assigned by the parallel two-pass scheme in ``operators/ids`` — no
-  global-order window (single-task), and never raw
-  ``monotonically_increasing_id`` — it's non-dense by design.
-- mutations are **set-oriented**: delete/upsert are anti-join + union,
-  one shuffle for any number of ids, instead of the reference's N+1
-  HTTP round-trips (weaviate.py:167-173, TODO at :170-171).
+  counter (reference weaviate_txtai/ann/weaviate.py:67,143,149). A batch
+  arrives as a Python list, so they are assigned in Python
+  (``offset + i``) before the batch becomes a DataFrame: no Spark pass,
+  and never raw ``monotonically_increasing_id`` — it's non-dense by
+  design.
+- mutations are **narrow**: upsert/delete drop the replaced or deleted
+  rows with an ``id IN (<batch ids>)`` filter and union the encoded
+  batch, coalesced back to the corpus's partition count — no shuffle
+  for any number of ids, instead of the reference's N+1 HTTP
+  round-trips (weaviate.py:167-173, TODO at :170-171).
+- the corpus frame is **always filled**: every index/upsert/delete/load
+  ends in one eager ``localCheckpoint`` of the new state, whose plan
+  restarts from the filled blocks, and only then releases the previous
+  state's blocks. A mutation costs O(batch) planning plus one pass over
+  the corpus, never a replay of earlier mutations.
 - ``similar('…')`` inside SQL text is rewritten into a score-column
   attachment on the ``txtai`` view; every other SQL feature (metadata
   predicates, aggregates, ORDER BY score, LIMIT) is plain Spark SQL.
@@ -43,6 +51,7 @@ import os
 import re
 from typing import Any, Iterable, Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,6 +60,13 @@ from weaviate_txtai_spark.functions.vector import cosine_sim
 from weaviate_txtai_spark.operators.topk import rank_top
 
 _SIMILAR_RE = re.compile(r"similar\s*\(\s*'([^']*)'\s*\)", re.IGNORECASE)
+
+
+def _blocks(df: DataFrame):
+    """The JVM RDD whose blocks hold a ``localCheckpoint``-ed frame (the
+    ``LogicalRDD`` its analyzed plan is), for its partition count and to
+    drop its blocks."""
+    return df._jdf.queryExecution().analyzed().rdd()
 
 
 def rewrite_similar_sql(sql: str) -> tuple[str, str | None]:
@@ -114,8 +130,7 @@ class Embeddings:
             raise ValueError(f"Embeddings: unknown backend {self.backend!r}")
         self._ann = None          # cached IVFIndex
         self._ann_mutations = -1  # mutation counter it was built at
-        self._df: DataFrame | None = None
-        self._meta_cols: list[str] = []
+        self._df: DataFrame | None = None  # always an eager localCheckpoint
         # reference parity: running offset so docids never collide across
         # appends (weaviate.py:67,149; asserted tests/ann/test_weaviate.py:141)
         self.offset = 0
@@ -160,95 +175,92 @@ class Embeddings:
             if all_null
             else rows
         )
-        df = self.spark.createDataFrame([Row(**r) for r in infer_rows])
-        for k in all_null:
-            df = df.withColumn(k, F.lit(None).cast("string"))
-        # dense docids via the parallel two-pass scheme (operators/ids) —
-        # no global-order window, so ingest stays parallel at any batch
-        # size (SURVEY §7 hard-parts list).
-        from weaviate_txtai_spark.operators.ids import with_dense_ids
-
-        df, _ = with_dense_ids(df, start=start, id_col="docid")
+        # dense docids from the running offset, in batch order
+        df = self.spark.createDataFrame(
+            [Row(**{**r, "docid": start + i}) for i, r in enumerate(infer_rows)]
+        )
+        if all_null:
+            # typed nulls sit before docid, where the schema always had them
+            df = df.select(
+                *[c for c in df.columns if c != "docid"],
+                *[F.lit(None).cast("string").alias(k) for k in all_null],
+                "docid",
+            )
         return self.encoder.encode_df(df, text_col="text")
+
+    def _replace(self, df: DataFrame) -> None:
+        """Make ``df`` the corpus: fill it as an eager ``localCheckpoint``
+        (one job; its plan restarts from the filled blocks, so no later
+        call replays this mutation), THEN drop the previous corpus's
+        blocks. Releasing first would leave the new plan reading blocks
+        that are gone. The blocks are dropped by hand because a
+        checkpoint has no ``unpersist``; waiting for GC would leave each
+        superseded corpus in executor storage for an unbounded time.
+        Blocks are stored serialized: for 306 documents 94 kB, against
+        214 kB as deserialized rows and 191 kB as a columnar cache."""
+        new = df.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+        if self._df is not None:
+            _blocks(self._df).unpersist(True)
+        self._df = new
+        self._mutations += 1  # invalidates the cached ANN index
 
     def index(self, documents: Iterable) -> None:
         """Drop any existing data and ingest (reference `index` ==
         drop-and-recreate, weaviate.py:112-135)."""
         rows = self._to_rows(documents)
-        self.offset = 0
-        # release the previous corpus cache like upsert/delete do — a
-        # reindex loop otherwise accumulates orphaned cached frames in
-        # executor storage until eviction pressure hits everything else
-        if self._df is not None:
-            self._df.unpersist()
-        self._df = self._encode_df(rows, 0).cache()
-        self._mutations += 1  # invalidates the cached ANN index
+        self._replace(self._encode_df(rows, 0))
         self.offset = len(rows)
-        self._meta_cols = [
-            c for c in self._df.columns if c not in ("id", "docid", "vector")
-        ]
 
     def upsert(self, documents: Iterable) -> None:
-        """Replace rows whose id matches; append the rest. One anti-join +
-        union — the set-oriented form of txtai's delete-then-append loop
-        (reference tests/ann/test_weaviate.py:254-317)."""
-        if self._df is None:
-            return self.index(documents)
+        """Replace rows whose id matches; append the rest — the
+        set-oriented form of txtai's delete-then-append loop (reference
+        tests/ann/test_weaviate.py:254-317). One job: the replaced rows
+        drop out through an ``id IN (...)`` filter, the encoded batch is
+        unioned on, and the union is coalesced back to the corpus's
+        partition count (at least the default parallelism), so the
+        partition count stays bounded however many upserts run."""
         rows = self._to_rows(documents)
+        if not rows:
+            return
         fresh = self._encode_df(rows, self.offset)
+        if self._df is not None:
+            kept = self._df.filter(
+                ~F.col("id").isin(sorted({r["id"] for r in rows}))
+            )
+            # conform the batch to the indexed schema: metadata columns
+            # the new documents don't carry become NULL (novel columns
+            # would need a reindex — same rule as any declared-schema
+            # store, SURVEY §1.2)
+            for c in kept.columns:
+                if c not in fresh.columns:
+                    fresh = fresh.withColumn(c, F.lit(None))
+            parts = max(
+                _blocks(self._df).getNumPartitions(),
+                self.spark.sparkContext.defaultParallelism,
+            )
+            fresh = kept.unionByName(
+                fresh.select(kept.columns), allowMissingColumns=False
+            ).coalesce(parts)
+        self._replace(fresh)
         self.offset += len(rows)
-        kept = self._df.join(fresh.select("id"), "id", "left_anti")
-        # conform the batch to the indexed schema: metadata columns the
-        # new documents don't carry become NULL (novel columns would need
-        # a reindex — same rule as any declared-schema store, SURVEY §1.2)
-        for c in kept.columns:
-            if c not in fresh.columns:
-                fresh = fresh.withColumn(c, F.lit(None))
-        old = self._df
-        self._df = kept.unionByName(
-            fresh.select(kept.columns), allowMissingColumns=False
-        ).cache()
-        old.unpersist()
-        self._truncate_lineage()
 
     def delete(self, ids: Sequence) -> list:
-        """Anti-join delete by user id — one shuffle for any number of
-        ids (vs the reference's two HTTP round-trips per id). Returns
-        the ids actually deleted (txtai's Embeddings.delete contract:
-        absent ids are ignored, present ones are reported back)."""
-        if self._df is None:
+        """Delete by user id with one ``id IN (...)`` filter — any number
+        of ids in one pass (vs the reference's two HTTP round-trips per
+        id). Returns the ids actually deleted (txtai's Embeddings.delete
+        contract: absent ids are ignored, present ones are reported
+        back). When none is present the corpus, the mutation counter and
+        any cached ANN index stay as they are."""
+        wanted = sorted({str(i) for i in ids})
+        if self._df is None or not wanted:
             return []
-        ids_df = self.spark.createDataFrame(
-            [(str(i),) for i in ids], schema="id string"
-        )
-        deleted = [
-            r["id"]
-            for r in self._df.join(ids_df, "id", "left_semi")
-            .select("id")
-            .collect()
-        ]
-        old = self._df
-        self._df = old.join(ids_df, "id", "left_anti").cache()
-        old.unpersist()
-        self._truncate_lineage()
+        hit = F.col("id").isin(wanted)
+        deleted = [r["id"] for r in self._df.filter(hit).select("id").collect()]
+        if deleted:
+            self._replace(self._df.filter(~hit))
         return deleted
-
-    def _truncate_lineage(self) -> None:
-        """Every N mutations, cut the plan lineage with an eager
-        localCheckpoint. Each upsert/delete stacks an anti-join + union
-        on the previous plan; after hundreds of mutations the lineage
-        alone costs analysis time and a failure would recompute the
-        whole chain. Checkpointing materializes the current state and
-        restarts the chain from it — the micro-scale analog of
-        compaction in a Delta/Iceberg table."""
-        self._mutations += 1
-        if self._mutations % 8 == 0 and self._df is not None:
-            cp = self._df.localCheckpoint(eager=True)
-            # the pre-checkpoint cache entry is orphaned once cp takes
-            # over (reads come from the checkpointed blocks) — release
-            # it instead of leaking one entry per 8 mutations
-            self._df.unpersist()
-            self._df = cp
 
     # ------------------------------------------------------------- query
 
@@ -513,12 +525,8 @@ class Embeddings:
             encoder or HashingEncoder(meta["encoder_dim"]),
             config=meta.get("config") or None,
         )
-        self._df = spark.read.parquet(os.path.join(path, "data")).cache()
-        self._mutations += 1  # fresh frame: any cached ANN is stale
+        self._replace(spark.read.parquet(os.path.join(path, "data")))
         self.offset = meta["offset"]
-        self._meta_cols = [
-            c for c in self._df.columns if c not in ("id", "docid", "vector")
-        ]
         return self
 
     def batchsearch(self, queries: Sequence[str], limit: int = 3) -> list:
